@@ -7,15 +7,20 @@ right ≥ value — reference nocuda.cpp:91-93).
 Single-scan exact algorithm, all pruning expressed as ``sort_key`` range
 predicates (Parquet/Iceberg min-max pruning + partition pruning apply):
 
-  Bound (driver-side, no data scan): each query descends the broadcast
-  tree to its leaf, walks up to the smallest ancestor holding ≥ k points
-  (the seed node), and takes the far corner of the seed's exact data bbox
-  — recorded by the build's own stats shuffle — as an upper bound r_q on
-  the k-th distance: the ≥ k seed points all lie inside that bbox.
+  Bound (driver-side, no data scan): the build records the exact data
+  bbox of every split and every leaf. Any node holding ≥ k points bounds
+  the k-th distance by its bbox's far corner, since those points all lie
+  inside it. The seed node is the one whose far corner is nearest the
+  query (SplitTree.knn_seed_node): a branch-and-bound search, best-first
+  by bbox min-distance, starting from the smallest ancestor of the
+  query's leaf that holds ≥ k points. It prunes nodes holding < k points
+  and nodes whose min-distance exceeds the best far corner so far. That
+  far corner is r_q², the upper bound on the k-th distance².
 
   Cover (the only data pass): every leaf region intersecting
-  circle(q, r_q) is collected into merged sort_key intervals; one pruned
-  scan + exact distance + per-query top-k window gives the exact answer.
+  circle(q, r_q), minus subtrees whose data bbox lies farther than r_q, is
+  collected into merged sort_key intervals; one pruned scan + exact
+  distance + per-query top-k window gives the exact answer.
 
 This replaces the round-1 two-scan design (phase A ran a full candidate
 scan + window just to measure the k-th distance, with a driver collect
@@ -134,8 +139,8 @@ def knn(
 def _seed_r2_bound(qx: np.ndarray, qy: np.ndarray, A: dict, k: int) -> np.ndarray:
     """Vectorized per-query k-th-distance² upper bound: descend the flat
     tree arrays; the bound is the far corner of the data bbox of the
-    deepest path node still holding ≥ k points (numpy twin of
-    SplitTree.knn_seed_node + knn_r2_bound)."""
+    deepest path node still holding ≥ k points (the leaf-ancestor seed
+    that SplitTree.knn_seed_node starts its branch-and-bound from)."""
     n = len(qx)
     if len(A["ids"]) == 0 or A["ids"][0] != 0:
         return np.full(n, np.inf)
@@ -174,7 +179,8 @@ def _cover_intervals(
     qx: np.ndarray, qy: np.ndarray, r2: np.ndarray, A: dict
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Vectorized circle cover: level-synchronous frontier expansion over
-    (query, node) pairs — the numpy twin of SplitTree.ranges_for_circle.
+    (query, node) pairs — the split-plane walk of SplitTree.ranges_for_circle,
+    without its data-bbox pruning.
     Returns (query_row_idx, lo, hi); leaf intervals are disjoint by
     construction, so no merge/dedup is needed."""
     n = len(qx)
@@ -258,7 +264,6 @@ def knn_batch(
     query_id: str = "query_id",
     qx_col: str = "qx",
     qy_col: str = "qy",
-    broadcast_cover: bool = True,
 ) -> DataFrame:
     """Exact kNN for LARGE query batches, fully distributed: the per-query
     planning (seed bound + circle cover) that :func:`knn` runs in a driver
@@ -277,12 +282,8 @@ def knn_batch(
     40-row mapInPandas stage they replaced; an earlier session's opposite
     reading came from a polluted window.)
 
-    ``broadcast_cover=True`` (default) hints the cover side into a
-    broadcast hash join so the POINT table is never shuffled — right up to
-    ~10^6-interval covers. Beyond that, set False: the join becomes a
-    shuffle on ``bucket`` (both sides partitioned by key — the correct
-    shape when the query batch itself is data-scale; AQE skew-split
-    applies)."""
+    The cover side is hinted into a broadcast hash join, so the POINT
+    table is never shuffled."""
     spark = index.points.sparkSession
     tree = index.tree
     total = tree.total_points
@@ -330,12 +331,10 @@ def knn_batch(
             )
         ),
     )
-    if broadcast_cover:
-        ivals = F.broadcast(ivals)
     pts = pts.withColumn("bucket", F.shiftright("sort_key", shift))
     w = Window.partitionBy("query_id").orderBy("d2", "key")
     return (
-        pts.join(ivals, "bucket")
+        pts.join(F.broadcast(ivals), "bucket")
         .filter((F.col("sort_key") >= F.col("lo")) & (F.col("sort_key") < F.col("hi")))
         .withColumn("d2", dist2(F.col("x"), F.col("y"), F.col("qx"), F.col("qy")))
         .filter(F.col("d2") <= F.col("r2"))

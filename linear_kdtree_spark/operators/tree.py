@@ -22,6 +22,7 @@ pruning then exploit.
 
 from __future__ import annotations
 
+import heapq
 import math
 from dataclasses import dataclass
 
@@ -170,30 +171,6 @@ class SplitTree:
             return p.n_left if node_id == 2 * parent + 1 else p.n_right
         return 0
 
-    def bbox(self, node_id: int) -> tuple[float, float, float, float]:
-        """(xmin, xmax, ymin, ymax) half-open bounds of a node's region,
-        derived by replaying ancestor splits from the root."""
-        path = []
-        n = node_id
-        while n > 0:
-            parent = (n - 1) // 2
-            path.append((parent, n == 2 * parent + 1))
-            n = parent
-        xmin, xmax, ymin, ymax = -INF, INF, -INF, INF
-        for parent, went_left in reversed(path):
-            s = self.nodes[parent]
-            if s.axis == 0:
-                if went_left:
-                    xmax = min(xmax, s.value)
-                else:
-                    xmin = max(xmin, s.value)
-            else:
-                if went_left:
-                    ymax = min(ymax, s.value)
-                else:
-                    ymin = max(ymin, s.value)
-        return xmin, xmax, ymin, ymax
-
     def leaf_for(self, x: float, y: float) -> int:
         """Heap id of the leaf region containing (x, y) — the query-side
         replay of the build's descent (reference lkt.cpp:146-152)."""
@@ -205,17 +182,18 @@ class SplitTree:
         return j
 
     # ------------------------------------------------------------ planning
-    def ranges_for_bbox(
-        self, xmin: float, ymin: float, xmax: float, ymax: float
+    def _cover(
+        self, xmin: float, ymin: float, xmax: float, ymax: float, prune=None
     ) -> list[tuple[int, int]]:
-        """Merged, sorted half-open ``sort_key`` intervals covering every
-        region intersecting the closed query bbox. This replaces a custom
-        Catalyst rule: the ranges become plain predicates Catalyst pushes to
-        the scan (SURVEY.md §4.2)."""
+        """Merged, sorted half-open ``sort_key`` intervals of every leaf
+        region intersecting the closed query bbox, skipping any subtree for
+        which ``prune(node_id)`` is true."""
         out: list[tuple[int, int]] = []
         stack = [0]
         while stack:
             n = stack.pop()
+            if prune is not None and prune(n):
+                continue
             if n not in self.nodes:
                 out.append(node_interval(n, self.max_depth))
                 continue
@@ -228,30 +206,72 @@ class SplitTree:
                 stack.append(2 * n + 2)
         return merge_intervals(out)
 
+    def ranges_for_bbox(
+        self, xmin: float, ymin: float, xmax: float, ymax: float
+    ) -> list[tuple[int, int]]:
+        """Merged, sorted half-open ``sort_key`` intervals covering every
+        region intersecting the closed query bbox. This replaces a custom
+        Catalyst rule: the ranges become plain predicates Catalyst pushes to
+        the scan (SURVEY.md §4.2)."""
+        return self._cover(xmin, ymin, xmax, ymax)
+
     def ranges_for_circle(
         self, cx: float, cy: float, r: float
     ) -> list[tuple[int, int]]:
-        return self.ranges_for_bbox(cx - r, cy - r, cx + r, cy + r)
+        """Cover of the closed disc (cx, cy, r): the split-plane walk of its
+        square, minus every subtree whose recorded data bbox lies farther
+        than r. Exact against a ``dist2 <= r2`` refine with
+        ``r = sqrt(r2)``: rounded subtraction, squaring and sqrt are all
+        monotone, so a pruned subtree's points all have dist2 > r2. Nodes
+        without a recorded bbox keep only the split-plane test."""
+        bounds = self.node_bounds
+
+        def far(n: int) -> bool:
+            bb = bounds.get(n)
+            return bb is not None and math.sqrt(min_dist2(bb, cx, cy)) > r
+
+        return self._cover(cx - r, cy - r, cx + r, cy + r, far)
 
     def knn_seed_node(self, x: float, y: float, k: int) -> int:
-        """Smallest ancestor of (x, y)'s leaf whose subtree holds ≥ k points
-        — the phase-A candidate region for exact kNN."""
-        n = self.leaf_for(x, y)
-        while n > 0 and self.count(n) < k:
-            n = (n - 1) // 2
-        return n
+        """The node holding ≥ k points whose data-bbox far corner is nearest
+        (x, y); its far-corner distance² is :meth:`knn_r2_bound`, the
+        query's upper bound on the k-th-NN distance².
 
-    def min_dist2_to_bbox(self, x: float, y: float, node_id: int) -> float:
-        xmin, xmax, ymin, ymax = self.bbox(node_id)
-        dx = max(xmin - x, 0.0, x - xmax)
-        dy = max(ymin - y, 0.0, y - ymax)
-        return dx * dx + dy * dy
+        Branch-and-bound, best-first by data-bbox min-distance², starting
+        from the smallest ancestor of (x, y)'s leaf that holds ≥ k points.
+        A node holding < k points is pruned with its subtree (its
+        descendants hold fewer still); so is every node whose
+        min-distance² exceeds the best far corner found so far (its
+        descendants' far corners are no nearer than that). The seed is
+        never farther than the leaf-ancestor one, which it starts from.
+        Trees without recorded bounds return the leaf-ancestor seed."""
+        seed = self.leaf_for(x, y)
+        while seed > 0 and self.count(seed) < k:
+            seed = (seed - 1) // 2
+        best = self.knn_r2_bound(x, y, seed)
+        if math.isinf(best):
+            return seed
+        heap = [(0.0, 0)]
+        while heap:
+            d2, n = heapq.heappop(heap)
+            if d2 > best:
+                break
+            bb = self.data_bbox(n)
+            fc = far_dist2(bb, x, y)
+            if fc < best:
+                best, seed = fc, n
+            if n in self.nodes:
+                for c in (2 * n + 1, 2 * n + 2):
+                    if self.count(c) >= k:
+                        heapq.heappush(heap, (min_dist2(self.data_bbox(c), x, y), c))
+        return seed
 
     def data_bbox(self, node_id: int) -> tuple[float, float, float, float] | None:
         """Exact (xmin, xmax, ymin, ymax) of the points under ``node_id``,
-        from the build's per-level stats — or the nearest recorded ancestor's
-        (a superset, still a valid bound). None when the tree carries no
-        bounds (e.g. reloaded from a bare splits table)."""
+        from the build (every split and every leaf) — or the nearest
+        recorded ancestor's (a superset, still a valid bound). None when
+        the tree carries no bounds (e.g. reloaded from a bare splits
+        table)."""
         n = node_id
         while True:
             if n in self.node_bounds:
@@ -269,10 +289,25 @@ class SplitTree:
         bb = self.data_bbox(node_id)
         if bb is None:
             return INF
-        xmin, xmax, ymin, ymax = bb
-        dx = max(abs(x - xmin), abs(x - xmax))
-        dy = max(abs(y - ymin), abs(y - ymax))
-        return dx * dx + dy * dy
+        return far_dist2(bb, x, y)
+
+
+def min_dist2(bb: tuple, x: float, y: float) -> float:
+    """Distance² from (x, y) to the nearest point of bbox
+    (xmin, xmax, ymin, ymax); never above any contained point's dist2."""
+    xmin, xmax, ymin, ymax = bb
+    dx = max(xmin - x, 0.0, x - xmax)
+    dy = max(ymin - y, 0.0, y - ymax)
+    return dx * dx + dy * dy
+
+
+def far_dist2(bb: tuple, x: float, y: float) -> float:
+    """Distance² from (x, y) to the farthest corner of bbox
+    (xmin, xmax, ymin, ymax); never below any contained point's dist2."""
+    xmin, xmax, ymin, ymax = bb
+    dx = max(abs(x - xmin), abs(x - xmax))
+    dy = max(abs(y - ymin), abs(y - ymax))
+    return dx * dx + dy * dy
 
 
 def merge_intervals(intervals: list[tuple[int, int]]) -> list[tuple[int, int]]:

@@ -195,7 +195,9 @@ def build_local_fast(
 
     Extra: ``result.kd_perm`` — indices in physical kd order (left
     subtree first = depth-first layout, ties by original position), free
-    from the partition layout; equals ``result.kd_order()``.
+    from the partition layout; equals ``result.kd_order()``. And
+    ``result.bounds`` — local node id → exact data bbox (xmin, xmax, ymin,
+    ymax) for every leaf and split of the subtree.
     """
     n = len(x)
     xs = np.array(x, dtype=coord_dtype)  # working copies, partition order
@@ -209,7 +211,6 @@ def build_local_fast(
     code_p = np.zeros(n, dtype=np.int64)
     sk_p = np.zeros(n, dtype=np.int64)
     splits: dict[int, OracleSplit] = {}
-    split_bounds: dict[int, tuple] = {}
 
     # Level-synchronous VECTORIZED traversal: per level, one gathered
     # O(active-rows) pass computes the stable partition of EVERY splitting
@@ -323,34 +324,34 @@ def build_local_fast(
         if 2 * nid + 2 in splits:
             sp.right_child = 2 * nid + 2
 
-    # exact data bbox per split subtree — flows into SplitTree.node_bounds
-    # so the kNN radius bound stays leaf-granular on the fused-build path.
-    # Computed ONCE from the final partition order (each node's rows are a
-    # contiguous slice): leaf bboxes via 4 reduceat passes over n, then a
-    # bottom-up union (descending ids ⇒ children before parents) — O(n +
-    # #nodes) total, vs the per-level min/max this replaces (O(n·depth),
-    # measured ~20 % of the clean fused build at 4.8 M, VERDICT r4 #3).
-    # Bit-identical: min/max over the same value multiset, any order.
-    if n and splits:
+    # exact data bbox of every node, leaves and splits — flows into
+    # SplitTree.node_bounds, where the kNN seed search and circle cover
+    # prune on it. Computed ONCE from the final partition order (each
+    # node's rows are a contiguous slice): leaf bboxes via 4 reduceat
+    # passes over n, then a bottom-up union (descending ids ⇒ children
+    # before parents) — O(n + #nodes) total, vs the per-level min/max this
+    # replaces (O(n·depth), measured ~20 % of the clean fused build at
+    # 4.8 M, VERDICT r4 #3). Bit-identical: min/max over the same value
+    # multiset, any order.
+    bb: dict[int, tuple] = {}
+    if n:
         seg_start = np.flatnonzero(np.r_[True, node_p[1:] != node_p[:-1]])
         leaf_ids = node_p[seg_start]
         xmn = np.minimum.reduceat(xs, seg_start)
         xmx = np.maximum.reduceat(xs, seg_start)
         ymn = np.minimum.reduceat(ys, seg_start)
         ymx = np.maximum.reduceat(ys, seg_start)
-        bb: dict[int, tuple] = {
+        bb = {
             int(l): (float(xmn[i]), float(xmx[i]), float(ymn[i]), float(ymx[i]))
             for i, l in enumerate(leaf_ids)
         }
         for nid in sorted(splits, reverse=True):
             lb = bb[2 * nid + 1]
             rb = bb[2 * nid + 2]
-            u = (
+            bb[nid] = (
                 min(lb[0], rb[0]), max(lb[1], rb[1]),
                 min(lb[2], rb[2]), max(lb[3], rb[3]),
             )
-            bb[nid] = u
-            split_bounds[nid] = u
 
     # scatter back to original point order (build_oracle's contract); the
     # partition order itself is exactly kd order (left subtree first,
@@ -369,7 +370,7 @@ def build_local_fast(
         max_depth=max_depth,
     )
     res.kd_perm = orig
-    res.split_bounds = split_bounds
+    res.bounds = bb
     return res
 
 

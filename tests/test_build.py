@@ -192,7 +192,7 @@ def test_build_leaf_size_bounds_tree(spark, random_points):
 
 
 def test_fused_build_records_leaf_granular_bounds(spark):
-    """The fused local finish must ship per-split bboxes into
+    """The fused local finish must ship per-split and per-leaf bboxes into
     tree.node_bounds — without them the kNN radius bound degrades to the
     handoff-threshold region size (r4 regression: 53M candidates for 40
     queries). Bounds must extend well past the distributed levels and
@@ -229,3 +229,8 @@ def test_fused_build_records_leaf_granular_bounds(spark):
     assert len(sub) > 0
     assert np.isclose(sub.x.min(), xmin) and np.isclose(sub.x.max(), xmax)
     assert np.isclose(sub.y.min(), ymin) and np.isclose(sub.y.max(), ymax)
+    # every non-empty leaf carries its exact data bbox
+    for leaf, g in pts.groupby("node"):
+        assert idx.tree.node_bounds[leaf] == (
+            g.x.min(), g.x.max(), g.y.min(), g.y.max()
+        ), leaf
